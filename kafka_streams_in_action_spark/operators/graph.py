@@ -25,6 +25,8 @@ tolerance at all.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -37,16 +39,16 @@ from contextlib import contextmanager
 @contextmanager
 def _few_shuffle_partitions(spark, n: int = 4):
     """Scoped shuffle-partition override for the bounded iteration
-    loops (r13 verdict hygiene item): the loops' shuffles move only
-    O(#nodes) frames, so 32 ambient partitions just multiply
-    task-launch overhead. The override is a SESSION conf — restoring
-    it in finally makes it exception-safe, but a concurrently-built
-    query in the same session would still compile under n=4 while the
-    loop runs. The package's build contract is single-threaded (the
-    bench, driver, and tests all build queries sequentially); this
-    manager is the one place that contract is load-bearing, and
-    tests/test_round16.py pins that the ambient value is restored on
-    both the normal and the raising path."""
+    loops that still run in Spark (pagerank, hits, kcore here; the CC
+    label propagation in dedup.py and the greedy selection in
+    similarity.py): their shuffles move only O(#nodes) frames, so the
+    ambient partition count just multiplies task-launch overhead. The
+    override is a SESSION conf — restoring it in finally makes it
+    exception-safe, but a concurrently-built query in the same session
+    would still compile under n while the loop runs, so callers must
+    build queries one at a time. tests/test_round16.py pins that the
+    ambient value is restored on both the normal and the raising
+    path."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -61,7 +63,8 @@ def trade_edges(customer: DataFrame, orders: DataFrame,
     nation → supplier nation) pair, weighted by lineitem count. The
     4-table join is the data-scale work (fact-fact join on orderkey,
     dimension broadcasts); the aggregated edge list is O(N²) in nations
-    — bounded — which is what makes the iteration loop cheap."""
+    — bounded — which is what makes the iteration loops cheap and lets
+    the hop-distance operators collect it (_collect_graph)."""
     return (lineitem
             .join(orders, lineitem.l_orderkey == orders.o_orderkey)
             .join(customer, orders.o_custkey == customer.c_custkey)
@@ -69,6 +72,123 @@ def trade_edges(customer: DataFrame, orders: DataFrame,
             .groupBy(F.col("c_nationkey").alias("src"),
                      F.col("s_nationkey").alias("dst"))
             .agg(F.count(F.lit(1)).alias("w")))
+
+
+def _top_edges(edges_all: DataFrame, top_edges: int) -> DataFrame:
+    """The sparsified trade graph: each node's `top_edges` heaviest
+    out-edges, ties broken by dst — fully deterministic, so the DuckDB
+    oracles replay the same graph with the same row_number window."""
+    w_rank = Window.partitionBy("src").orderBy(
+        F.col("w").desc(), F.col("dst"))
+    return (edges_all
+            .withColumn("_rn", F.row_number().over(w_rank))
+            .filter(F.col("_rn") <= top_edges)
+            .select("src", "dst", "w"))
+
+
+def _collect_graph(customer, orders, lineitem, supplier,
+                   edges: DataFrame, top_edges: int,
+                   sources: DataFrame) -> tuple[dict, list]:
+    """The ONE collect of the bounded-graph operators: the sparsified
+    edge list as {src: [(dst, w), ...]}, plus the n_nationkey of the
+    `sources` nation rows (the BFS sources), which ride the same
+    collect as rows flagged _is_source. That is at most
+    (top_edges + 1)·|nations| rows at every scale factor. The 4-table
+    join that builds the edges is the only data-scale work and stays in
+    Spark, as does the top-k window; the closures then run on the
+    driver, where a 25-node graph costs microseconds against one Spark
+    job per BFS round — the way c34_markov folds its bounded matrix."""
+    if edges is None:
+        edges = trade_edges(customer, orders, lineitem, supplier)
+    keys = sources.select(F.col("n_nationkey").alias("src"),
+                          F.lit(None).alias("dst"), F.lit(None).alias("w"),
+                          F.lit(True).alias("_is_source"))
+    rows = (_top_edges(edges, top_edges)
+            .withColumn("_is_source", F.lit(False))
+            .unionByName(keys).collect())
+    adj, srcs = {}, []
+    for r in rows:
+        if r["_is_source"]:
+            srcs.append(r["src"])
+        else:
+            adj.setdefault(r["src"], []).append((r["dst"], r["w"]))
+    return adj, srcs
+
+
+def _min_hops(adj: dict, sources, max_hops: int | None = None) -> dict:
+    """Level-synchronous BFS from all of `sources` at once over
+    {src: [(dst, w), ...]}: {node: min hops from any source} for every
+    node reached within `max_hops` (None: the full closure), sources at
+    0. Each node is expanded once, so this equals the min over all
+    walks of length ≤ max_hops — the oracles' recursive-CTE
+    semantics."""
+    dist = dict.fromkeys(sources, 0)
+    frontier = list(dist)
+    hops = 0
+    while frontier and (max_hops is None or hops < max_hops):
+        hops += 1
+        nxt = []
+        for u in frontier:
+            for v, _w in adj.get(u, ()):
+                if v not in dist:
+                    dist[v] = hops
+                    nxt.append(v)
+        frontier = nxt
+    return dist
+
+
+def _min_costs(adj: dict, source) -> dict:
+    """Integer Bellman-Ford from `source` over {src: [(dst, w), ...]}
+    with edge cost 1 + w mod 4: {node: min summed cost} for every
+    reachable node. Rounds relax every edge until none improves; costs
+    are ≥ 1, so that happens within |nodes|−1 rounds."""
+    dist = {source: 0}
+    improved = True
+    while improved:
+        improved = False
+        for u, outs in adj.items():
+            if u not in dist:
+                continue
+            for v, w in outs:
+                d = dist[u] + 1 + w % 4
+                if v not in dist or d < dist[v]:
+                    dist[v] = d
+                    improved = True
+    return dist
+
+
+def _sql_literal(v) -> str:
+    """Python bools / ints / tuples / dicts as Spark SQL literal text
+    (struct / map)."""
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, tuple):
+        return f"struct({', '.join(map(_sql_literal, v))})"
+    if isinstance(v, dict):
+        return "map(" + ", ".join(f"{_sql_literal(k)}, {_sql_literal(x)}"
+                                  for k, x in v.items()) + ")"
+    raise TypeError(f"no SQL literal for {v!r}")
+
+
+def _by_nation(nation: DataFrame, per_node: dict,
+               value_type: str) -> DataFrame:
+    """Per-node driver results looked up on the nation scan, expanded
+    into the columns nationkey, nation, then the fields of `value_type`
+    (a STRUCT); nations absent from `per_node` are dropped. The results
+    return as ONE typed literal map node → value, parsed once, so the
+    plan stays JVM-only: no Python worker and no RDD scan, unlike
+    createDataFrame on a Python list."""
+    key_type = dict(nation.dtypes)["n_nationkey"]
+    m = F.expr(f"CAST({_sql_literal(per_node)} AS "
+               f"MAP<{key_type}, {value_type}>)")
+    return (nation
+            .select(F.col("n_nationkey").alias("nationkey"),
+                    F.col("n_name").alias("nation"),
+                    F.element_at(m, F.col("n_nationkey")).alias("_v"))
+            .filter(F.col("_v").isNotNull())
+            .select("nationkey", "nation", "_v.*"))
 
 
 def pagerank(nodes: DataFrame, edges: DataFrame,
@@ -224,60 +344,24 @@ def khop_reachability(customer: DataFrame, orders: DataFrame,
                       top_edges: int = 3,
                       edges: DataFrame = None) -> DataFrame:
     """C38c: bounded-depth reachability (directed transitive closure to
-    `k` hops) — min-hop BFS from a seed set, the recursive-CTE workload
-    (supply-chain blast radius, dependency closure) expressed as the
-    iterative frontier expansion a cluster actually runs: each round is
-    one keyed join frontier⋈edges plus an anti-join against the reached
-    set, and ONLY the O(#nodes) frontier recirculates.
+    `k` hops) — min-hop distance from a seed set, the recursive-CTE
+    workload (supply-chain blast radius, dependency closure).
 
     The graph is the nation trade graph sparsified to each node's
-    `top_edges` heaviest outgoing edges (ties broken by dst — fully
-    deterministic, so the DuckDB oracle can replay the same graph); the
-    seed set is region 0's nations at hop 0. As with pagerank above, the
-    4-table edge build is the data-scale work; the BFS loop moves
-    bounded frames, so it runs under few shuffle partitions with a
-    per-round localCheckpoint to keep lineage linear. BFS visits each
-    node once (anti-join), so loop cost is O(k · |frontier⋈edges|); the
-    oracle's UNION ALL recursion enumerates paths instead — equivalent
-    after min(hops), and bounded because hops < k caps path length."""
-    edges_all = (edges if edges is not None
-                 else trade_edges(customer, orders, lineitem, supplier))
-    w_rank = Window.partitionBy("src").orderBy(
-        F.col("w").desc(), F.col("dst"))
-    edges = (edges_all
-             .withColumn("_rn", F.row_number().over(w_rank))
-             .filter(F.col("_rn") <= top_edges)
-             .select("src", "dst")
-             .localCheckpoint())
-
-    seeds = (nation.filter(F.col("n_regionkey") == 0)
-             .select(F.col("n_nationkey").alias("node"),
-                     F.lit(0).alias("hops")))
-
-    spark = nation.sparkSession
-    # Optimization r15 (verdict item 5): ONE materialization per round
-    # instead of two — the frontier is no longer checkpointed
-    # separately; it is recovered from the just-materialized reached
-    # set as filter(hops == i) (every row added this round carries tag
-    # i and no earlier row does), so each round runs exactly one job.
-    # The reached contents — and therefore the result — are
-    # bit-identical to the two-checkpoint form.
-    with _few_shuffle_partitions(spark):
-        reached = seeds.localCheckpoint()
-        frontier = reached
-        for i in range(1, k + 1):
-            nxt = (frontier
-                   .join(edges, frontier.node == edges.src)
-                   .select(F.col("dst").alias("node"),
-                           F.lit(i).alias("hops"))
-                   .distinct())
-            new_rows = nxt.join(reached, "node", "left_anti")
-            reached = reached.unionAll(new_rows).localCheckpoint()
-            frontier = reached.filter(F.col("hops") == i)
-    return (reached
-            .join(nation, reached.node == nation.n_nationkey)
-            .select(F.col("node").alias("nationkey"),
-                    F.col("n_name").alias("nation"), "hops"))
+    `top_edges` heaviest outgoing edges (_top_edges); the seed set is
+    region 0's nations at hop 0. The 4-table edge build runs in Spark;
+    the sparsified graph (≤ top_edges·|nations| edges) and the seed
+    keys are collected once (_collect_graph) and the closure is one
+    multi-source BFS on the driver, capped at k (_min_hops). The hop
+    counts come back as one literal map node → hops looked up on the
+    nation scan. The oracle's UNION ALL recursion enumerates walks
+    instead — equal after min(hops), and finite because hops < k caps
+    the walk length."""
+    adj, seeds = _collect_graph(
+        customer, orders, lineitem, supplier, edges, top_edges,
+        nation.filter(F.col("n_regionkey") == 0))
+    hops = {u: (h,) for u, h in _min_hops(adj, seeds, k).items()}
+    return _by_nation(nation, hops, "STRUCT<hops: INT>")
 
 
 def degree_assortativity(customer: DataFrame, orders: DataFrame,
@@ -396,7 +480,7 @@ def copurchase_kcore(lineitem: DataFrame, k: int = 2,
     filter sparsifies the edge list before any iteration, and each
     peel round is one keyed semi-join + one degree aggregate over the
     BOUNDED edge list with a per-round localCheckpoint keeping lineage
-    linear — the same loop discipline as PageRank/BFS above."""
+    linear — the same loop discipline as PageRank above."""
     op = lineitem.select(F.col("l_orderkey").alias("o"),
                          F.col("l_partkey").alias("p")).distinct()
     a = op.select("o", F.col("p").alias("pa"))
@@ -462,65 +546,25 @@ def closeness_centrality(customer: DataFrame, orders: DataFrame,
     integer — no per-row float summation whose order could drift);
     classic closeness spends one correctly-rounded division.
 
-    The frontier holds (src, node) pairs — all sources advance in the
-    SAME keyed join per round (one frontier⋈edges + one anti-join
-    against reached, localCheckpoint lineage), not |V| separate BFS
-    runs; rounds are capped at max_hops with an empty-frontier early
-    exit (an empty frontier stays empty, so stopping early is
-    idempotent — the kcore discipline). The oracle's recursive CTE
-    enumerates paths to the same hop cap and collapses to the same
-    min-hop distances."""
-    edges_all = (edges if edges is not None
-                 else trade_edges(customer, orders, lineitem, supplier))
-    w_rank = Window.partitionBy("src").orderBy(
-        F.col("w").desc(), F.col("dst"))
-    edges = (edges_all
-             .withColumn("_rn", F.row_number().over(w_rank))
-             .filter(F.col("_rn") <= top_edges)
-             .select("src", "dst")
-             .localCheckpoint())
-
-    seeds = (nation.select(F.col("n_nationkey").alias("src"))
-             .withColumn("node", F.col("src"))
-             .withColumn("hops", F.lit(0)))
-
-    spark = nation.sparkSession
-    # Optimization r15 (verdict item 5): one materialization per round —
-    # frontier recovered from the materialized closure as
-    # filter(hops == i) (bit-identical set: every row added this round
-    # carries tag i, no earlier row does); the emptiness probe is a
-    # cheap scan of the checkpointed frame. 3 jobs/round → 2.
-    with _few_shuffle_partitions(spark):
-        reached = seeds.localCheckpoint()
-        frontier = reached
-        for i in range(1, max_hops + 1):
-            nxt = (frontier
-                   .join(edges, frontier.node == edges.src)
-                   .select(frontier.src.alias("src"),
-                           F.col("dst").alias("node"),
-                           F.lit(i).alias("hops"))
-                   .distinct())
-            new_rows = nxt.join(reached, ["src", "node"], "left_anti")
-            reached = reached.unionAll(new_rows).localCheckpoint()
-            frontier = reached.filter(F.col("hops") == i)
-            if not frontier.take(1):
-                break
-    agg = (reached.groupBy("src")
-           .agg(F.count(F.lit(1)).alias("n_reached"),
-                F.sum("hops").alias("sum_hops"),
-                F.sum(F.when(F.col("hops") > 0,
-                             F.floor(F.lit(5040) / F.col("hops"))
-                             .cast("long")).otherwise(0))
-                .alias("harmonic_x5040")))
+    One BFS per nation, capped at max_hops, runs on the driver over the
+    once-collected sparsified graph (_collect_graph); each nation's
+    (n_reached, sum_hops, harmonic) sums are integer Python arithmetic
+    and come back as one literal map looked up on the nation scan. The
+    oracle's recursive CTE enumerates paths to the same hop cap and
+    collapses to the same min-hop distances."""
+    adj, srcs = _collect_graph(customer, orders, lineitem, supplier, edges,
+                               top_edges, nation)
+    sums = {}
+    for u in srcs:
+        hops = list(_min_hops(adj, [u], max_hops).values())
+        sums[u] = (len(hops), sum(hops), sum(5040 // h for h in hops if h))
     closeness = (F.when(F.col("sum_hops") > 0,
                         (F.col("n_reached") - 1).cast("double")
                         / F.col("sum_hops").cast("double")))
-    return (agg.join(F.broadcast(nation),
-                     agg.src == nation.n_nationkey)
-            .select(F.col("src").alias("nationkey"),
-                    F.col("n_name").alias("nation"),
-                    "n_reached", "sum_hops", "harmonic_x5040",
-                    closeness.alias("closeness")))
+    return (_by_nation(nation, sums,
+                       "STRUCT<n_reached: BIGINT, sum_hops: BIGINT, "
+                       "harmonic_x5040: BIGINT>")
+            .withColumn("closeness", closeness))
 
 
 def hits(nodes: DataFrame, edges: DataFrame,
@@ -613,62 +657,23 @@ def scc_trade(customer: DataFrame, orders: DataFrame,
     are mutually locked in"). Labels are canonical min-node-ids, sizes
     reported per node.
 
-    Distributed shape: ONE all-sources min-hop BFS to the full closure
-    (the closeness_centrality frontier loop — all sources advance in
-    the same keyed join per round, empty-frontier early exit; the
-    closure is bounded at |nations|² pairs), then SCC(u) = min{v :
-    (u→v) AND (v→u) in the closure} via a self-join of the bounded
-    pair set. The oracle's recursive CTE computes the same closure
+    The full closure (one uncapped BFS per nation) runs on the driver
+    over the once-collected sparsified graph (_collect_graph);
+    SCC(u) = min{v : v ∈ reach(u) and u ∈ reach(v)} over the nations,
+    and a component's size counts the nations carrying its label.
+    Labels and sizes come back as one literal map looked up on the
+    nation scan. The oracle's recursive CTE computes the same closure
     with UNION-dedup recursion (cycle-safe), so both engines label
-    identically. The 4-table edge build is the data-scale work."""
-    edges_all = (edges if edges is not None
-                 else trade_edges(customer, orders, lineitem, supplier))
-    w_rank = Window.partitionBy("src").orderBy(
-        F.col("w").desc(), F.col("dst"))
-    e = (edges_all
-         .withColumn("_rn", F.row_number().over(w_rank))
-         .filter(F.col("_rn") <= top_edges)
-         .select("src", "dst")
-         .localCheckpoint())
-
-    seeds = (nation.select(F.col("n_nationkey").alias("src"))
-             .withColumn("node", F.col("src"))
-             .withColumn("_r", F.lit(0)))
-    spark = nation.sparkSession
-    n_nodes = seeds.count()  # bounded: closure needs ≤ n-1 rounds
-    # Optimization r15 (verdict item 5): one materialization per round —
-    # the closure rows carry the round they were added in (_r, dropped
-    # below) so the frontier is filter(_r == rnd) of the materialized
-    # closure, bit-identical to the separately-checkpointed frontier.
-    with _few_shuffle_partitions(spark):
-        reached = seeds.localCheckpoint()
-        frontier = reached
-        for rnd in range(1, n_nodes):
-            nxt = (frontier
-                   .join(e, frontier.node == e.src)
-                   .select(frontier.src.alias("src"),
-                           F.col("dst").alias("node"))
-                   .distinct()
-                   .withColumn("_r", F.lit(rnd)))
-            new_rows = nxt.join(reached, ["src", "node"], "left_anti")
-            reached = reached.unionAll(new_rows).localCheckpoint()
-            frontier = reached.filter(F.col("_r") == rnd)
-            if not frontier.take(1):
-                break
-    reached = reached.drop("_r")
-    rev = reached.select(F.col("node").alias("src"),
-                         F.col("src").alias("node"))
-    mutual = reached.join(rev, ["src", "node"])
-    labels = (mutual.groupBy("src")
-              .agg(F.min("node").cast("long").alias("scc_label")))
-    sizes = labels.groupBy("scc_label").agg(
-        F.count(F.lit(1)).alias("scc_size"))
-    return (labels.join(F.broadcast(sizes), "scc_label")
-            .join(F.broadcast(nation),
-                  labels.src == nation.n_nationkey)
-            .select(F.col("src").alias("nationkey"),
-                    F.col("n_name").alias("nation"),
-                    "scc_label", "scc_size"))
+    identically."""
+    adj, srcs = _collect_graph(customer, orders, lineitem, supplier, edges,
+                               top_edges, nation)
+    reach = {u: _min_hops(adj, [u]) for u in srcs}
+    labels = {u: min(v for v in reach[u] if v in reach and u in reach[v])
+              for u in reach}
+    sizes = Counter(labels.values())
+    return _by_nation(nation,
+                      {u: (lab, sizes[lab]) for u, lab in labels.items()},
+                      "STRUCT<scc_label: BIGINT, scc_size: BIGINT>")
 
 
 def sssp_trade(customer: DataFrame, orders: DataFrame,
@@ -680,10 +685,8 @@ def sssp_trade(customer: DataFrame, orders: DataFrame,
     one frontier shape the C38 family lacked: every BFS row here
     (reach, closeness, scc, eccentricity) measures HOPS; real routing,
     cost attribution, and dependency-latency questions measure summed
-    EDGE COSTS, and the relaxation loop is the distributed primitive
-    for them (Bellman-Ford, 1958 — hop-bounded relaxation is exact for
-    non-negative integer costs and needs no priority queue, which is
-    why it distributes where Dijkstra does not).
+    EDGE COSTS (Bellman-Ford, 1958 — hop-bounded relaxation is exact
+    for non-negative integer costs and needs no priority queue).
 
     Edge costs are small integers derived from the data
     (1 + w mod 4 with w the lineitem-count edge weight — derived, not
@@ -693,61 +696,20 @@ def sssp_trade(customer: DataFrame, orders: DataFrame,
     set stays ≤ |nations|·(4|nations|−3) rows — domain-bounded, never
     path-enumeration-shaped.
 
-    Distributed shape: the eccentricity loop, but carrying min-cost
-    instead of first-reach round — each round joins the bounded
-    ≤|nations|-row distance vector to the bounded sparsified edge list,
-    takes the keyed min, and exits early when no distance improved
-    (checked via one bounded anti-join + one bounded inequality join —
-    both frames ≤|nations| rows). The 4-table edge build remains the
-    only data-scale work. Unreachable nations are excluded by
-    definition; the farthest/nearest verdicts are earned from the data
-    via a 1-row broadcast fold (the eccentricity discipline)."""
-    edges_all = (edges if edges is not None
-                 else trade_edges(customer, orders, lineitem, supplier))
-    w_rank = Window.partitionBy("src").orderBy(
-        F.col("w").desc(), F.col("dst"))
-    e = (edges_all
-         .withColumn("_rn", F.row_number().over(w_rank))
-         .filter(F.col("_rn") <= top_edges)
-         .select("src", "dst",
-                 (F.lit(1) + F.pmod(F.col("w"), F.lit(4)))
-                 .cast("long").alias("cost"))
-         .localCheckpoint())
-
-    spark = nation.sparkSession
-    n_nodes = nation.count()  # bounded: relaxation needs ≤ n-1 rounds
-    dist = (nation.filter(F.col("n_nationkey") == source)
-            .select(F.col("n_nationkey").alias("node"))
-            .withColumn("d", F.lit(0).cast("long")))
-    with _few_shuffle_partitions(spark):
-        dist = dist.localCheckpoint()
-        for _rnd in range(1, n_nodes):
-            cand = (dist.join(e, dist.node == e.src)
-                    .select(F.col("dst").alias("node"),
-                            (dist.d + F.col("cost")).alias("d")))
-            new = (dist.unionAll(cand)
-                   .groupBy("node").agg(F.min("d").alias("d"))
-                   .localCheckpoint())
-            # Optimization r15: ONE bounded probe instead of two — a
-            # round improved iff some (node, d) pair in `new` is absent
-            # from `dist` (a new node, or an old node at a strictly
-            # smaller min — d never increases), so the grew/better pair
-            # of probes collapses to a single anti-join on both columns.
-            improved = bool(
-                new.join(dist, ["node", "d"], "left_anti").take(1))
-            dist = new
-            if not improved:
-                break
-    bounds = dist.agg(F.max("d").alias("max_cost"),
-                      F.count(F.lit(1)).alias("n_reached"))
-    return (dist
-            .join(F.broadcast(nation), dist.node == nation.n_nationkey)
-            .crossJoin(F.broadcast(bounds))
-            .select(F.col("node").alias("nationkey"),
-                    F.col("n_name").alias("nation"),
-                    F.col("d").alias("dist_cost"),
-                    "n_reached",
-                    (F.col("d") == F.col("max_cost")).alias("is_farthest")))
+    The relaxation is integer Bellman-Ford on the driver (_min_costs)
+    over the once-collected sparsified graph (_collect_graph), from
+    `source` if it is a nation. Unreachable nations are excluded by
+    definition; n_reached counts the reached nodes and the farthest
+    verdict compares with their max cost. The rows come back as one
+    literal map looked up on the nation scan."""
+    adj, srcs = _collect_graph(
+        customer, orders, lineitem, supplier, edges, top_edges,
+        nation.filter(F.col("n_nationkey") == source))
+    dist = _min_costs(adj, source) if srcs else {}
+    far = max(dist.values(), default=0)
+    return _by_nation(
+        nation, {u: (d, len(dist), d == far) for u, d in dist.items()},
+        "STRUCT<dist_cost: BIGINT, n_reached: BIGINT, is_farthest: BOOLEAN>")
 
 
 def eccentricity_trade(customer: DataFrame, orders: DataFrame,
@@ -757,68 +719,31 @@ def eccentricity_trade(customer: DataFrame, orders: DataFrame,
     """C38 addendum (round 13): eccentricity / diameter / radius of the
     sparsified trade digraph — the all-pairs min-hop profile that tells
     you how many propagation rounds ANY frontier algorithm on this
-    graph needs (the iteration bound scc/reach/closeness all budget
-    by). Eccentricity of u = max over reachable v of the min-hop
-    distance u→v; diameter = max eccentricity, radius = min.
+    graph needs. Eccentricity of u = max over reachable v of the
+    min-hop distance u→v; diameter = max eccentricity, radius = min.
 
-    Distributed shape: the scc_trade all-sources BFS, but each closure
-    row keeps the ROUND it was first reached in — BFS order makes that
-    the exact min-hop distance, no re-relaxation needed. The loop is
-    bounded at |nations|−1 rounds with empty-frontier early exit; the
-    closure is ≤|nations|² pairs, and the 4-table edge build remains
-    the only data-scale work. The oracle's recursive CTE grows
-    (src, node, d) tuples with d bounded by the node count, then takes
-    min(d) — same distances, cycle-safe.
+    One uncapped BFS per nation runs on the driver over the
+    once-collected sparsified graph (_collect_graph); each nation's
+    (n_reachable, ecc) and the diameter / radius over the nations come
+    back as one literal map looked up on the nation scan. The oracle's
+    recursive CTE grows (src, node, d) tuples with d bounded by the
+    node count, then takes min(d) — same distances, cycle-safe.
 
     Unreachable pairs are excluded by definition (n_reachable is
-    emitted so the asymmetry is visible); global diameter/radius ride
-    a broadcast 1-row fold, and the per-node verdicts (peripheral ≡
-    ecc = diameter, central ≡ ecc = radius) are earned from the data."""
-    edges_all = (edges if edges is not None
-                 else trade_edges(customer, orders, lineitem, supplier))
-    w_rank = Window.partitionBy("src").orderBy(
-        F.col("w").desc(), F.col("dst"))
-    e = (edges_all
-         .withColumn("_rn", F.row_number().over(w_rank))
-         .filter(F.col("_rn") <= top_edges)
-         .select("src", "dst")
-         .localCheckpoint())
-
-    seeds = (nation.select(F.col("n_nationkey").alias("src"))
-             .withColumn("node", F.col("src"))
-             .withColumn("d", F.lit(0)))
-    spark = nation.sparkSession
-    n_nodes = seeds.count()  # bounded: closure needs ≤ n-1 rounds
-    # Optimization r15 (verdict item 5): one materialization per round —
-    # frontier = filter(d == rnd) of the materialized closure
-    # (bit-identical set); emptiness probe scans the checkpoint.
-    with _few_shuffle_partitions(spark):
-        reached = seeds.localCheckpoint()
-        frontier = reached
-        for rnd in range(1, n_nodes):
-            nxt = (frontier
-                   .join(e, frontier.node == e.src)
-                   .select(frontier.src.alias("src"),
-                           F.col("dst").alias("node"))
-                   .distinct()
-                   .withColumn("d", F.lit(rnd)))
-            new_rows = nxt.join(reached, ["src", "node"], "left_anti")
-            reached = reached.unionAll(new_rows).localCheckpoint()
-            frontier = reached.filter(F.col("d") == rnd)
-            if not frontier.take(1):
-                break
-    per_node = (reached.groupBy("src")
-                .agg(F.count(F.lit(1)).alias("n_reachable"),
-                     F.max("d").cast("int").alias("ecc")))
-    bounds = per_node.agg(F.max("ecc").alias("diameter"),
-                          F.min("ecc").alias("radius"))
-    return (per_node
-            .join(F.broadcast(nation),
-                  per_node.src == nation.n_nationkey)
-            .crossJoin(F.broadcast(bounds))
-            .select(F.col("src").alias("nationkey"),
-                    F.col("n_name").alias("nation"),
-                    "n_reachable", "ecc", "diameter", "radius",
-                    (F.col("ecc") == F.col("diameter"))
-                    .alias("is_peripheral"),
-                    (F.col("ecc") == F.col("radius")).alias("is_central")))
+    emitted so the asymmetry is visible), and the per-node verdicts
+    (peripheral ≡ ecc = diameter, central ≡ ecc = radius) are earned
+    from the data."""
+    adj, srcs = _collect_graph(customer, orders, lineitem, supplier, edges,
+                               top_edges, nation)
+    prof = {}
+    for u in srcs:
+        d = _min_hops(adj, [u])
+        prof[u] = (len(d), max(d.values()))
+    dia = max((e for _n, e in prof.values()), default=0)
+    rad = min((e for _n, e in prof.values()), default=0)
+    return _by_nation(
+        nation,
+        {u: (n, e, dia, rad, e == dia, e == rad)
+         for u, (n, e) in prof.items()},
+        "STRUCT<n_reachable: BIGINT, ecc: INT, diameter: INT, radius: INT, "
+        "is_peripheral: BOOLEAN, is_central: BOOLEAN>")

@@ -766,12 +766,9 @@ def _cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _o
     st = _o.stat(_o.path.join(sf_dir, "documents.parquet"))
     key = ("cms_src", sf_dir, st.st_mtime_ns, st.st_size)
-    src = _MV_SRC_CACHE.get(key)
-    if src is None:
-        src = _scratch_dir("c4_cmssrc_")
-        docs.select("doc_id", "text").repartition(4) \
-            .write.mode("overwrite").parquet(src)
-        _MV_SRC_CACHE[key] = src
+    src = _staged(_MV_SRC_CACHE, key, "c4_cmssrc_",
+                  lambda d: docs.select("doc_id", "text").repartition(4)
+                  .write.mode("overwrite").parquet(d))
     with _stream_partitions(spark, _parts_for(_cached_count(spark, sf_dir, "documents"))):
         cms = cms_stream_mv(
             spark, src, "doc_id long, text string",
@@ -934,17 +931,9 @@ def _staged_event_slices(spark: SparkSession, sf_dir: str,
     import os
     st = os.stat(os.path.join(sf_dir, "events.parquet"))
     key = (sf_dir, n, st.st_mtime_ns, st.st_size)
-    src = _SLICE_CACHE.get(key)
-    if src is None:
-        import atexit
-        import shutil
-        import tempfile
-        _reap_stale_scratch(f"events_slices_{n}_")
-        src = tempfile.mkdtemp(prefix=f"events_slices_{n}_")
-        atexit.register(shutil.rmtree, src, ignore_errors=True)
-        _write_time_slices(load_table(spark, "events", sf_dir), src, n)
-        _SLICE_CACHE[key] = src
-    return src
+    return _staged(_SLICE_CACHE, key, f"events_slices_{n}_",
+                   lambda d: _write_time_slices(
+                       load_table(spark, "events", sf_dir), d, n))
 
 
 #: Shared SINGLE-FILE staged copy of the full events table (optimization
@@ -962,18 +951,9 @@ def _staged_event_single(spark: SparkSession, sf_dir: str) -> str:
     import os
     st = os.stat(os.path.join(sf_dir, "events.parquet"))
     key = (sf_dir, st.st_mtime_ns, st.st_size)
-    src = _SINGLE_FILE_CACHE.get(key)
-    if src is None:
-        import atexit
-        import shutil
-        import tempfile
-        _reap_stale_scratch("events_single_")
-        src = tempfile.mkdtemp(prefix="events_single_")
-        atexit.register(shutil.rmtree, src, ignore_errors=True)
-        (load_table(spark, "events", sf_dir)
-         .coalesce(1).write.mode("overwrite").parquet(src))
-        _SINGLE_FILE_CACHE[key] = src
-    return src
+    return _staged(_SINGLE_FILE_CACHE, key, "events_single_",
+                   lambda d: load_table(spark, "events", sf_dir)
+                   .coalesce(1).write.mode("overwrite").parquet(d))
 
 
 def _write_time_slices(ev: DataFrame, src: str, n: int = 4,
@@ -1215,16 +1195,13 @@ def _staged_mv_src(spark: SparkSession, sf_dir: str) -> str:
     import os
     st = os.stat(os.path.join(sf_dir, "events.parquet"))
     key = (sf_dir, st.st_mtime_ns, st.st_size)
-    src = _MV_SRC_CACHE.get(key)
-    if src is None:
-        # prefix must NOT glob-match _scratch_dir("c35_mv_")'s reap
-        # pattern ("c35_mv_*"): a later per-call reap would delete the
-        # long-lived cached staging out from under the cache
-        src = _scratch_dir("c35_mvsrc_")
-        (load_table(spark, "events", sf_dir).select("user_id", "value")
-         .repartition(4).write.mode("overwrite").parquet(src))
-        _MV_SRC_CACHE[key] = src
-    return src
+    # prefix must NOT glob-match _scratch_dir("c35_mv_")'s reap
+    # pattern ("c35_mv_*"): a later per-call reap would delete the
+    # long-lived cached staging out from under the cache
+    return _staged(_MV_SRC_CACHE, key, "c35_mvsrc_",
+                   lambda d: load_table(spark, "events", sf_dir)
+                   .select("user_id", "value").repartition(4)
+                   .write.mode("overwrite").parquet(d))
 
 
 def _mv_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1685,17 +1662,9 @@ def _asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     st_o = os.stat(os.path.join(sf_dir, "orders.parquet"))
     key = (sf_dir, st_e.st_mtime_ns, st_e.st_size,
            st_o.st_mtime_ns, st_o.st_size)
-    src = _ASOF_SLICE_CACHE.get(key)
-    if src is None:
-        import atexit
-        import shutil
-        import tempfile
-        _reap_stale_scratch("asof_slices_")
-        src = tempfile.mkdtemp(prefix="asof_slices_")
-        atexit.register(shutil.rmtree, src, ignore_errors=True)
-        _write_time_slices(tagged, src,
-                           keys=("t", "is_event", "ord_key"))
-        _ASOF_SLICE_CACHE[key] = src
+    src = _staged(_ASOF_SLICE_CACHE, key, "asof_slices_",
+                  lambda d: _write_time_slices(
+                      tagged, d, keys=("t", "is_event", "ord_key")))
     sink = f"c10_asof_stream_{uuid.uuid4().hex[:8]}"
     with _stream_partitions(spark, _parts_for(_cached_count(spark, sf_dir, "events"))):
         q = (asof_apply_stream(
@@ -2561,11 +2530,8 @@ def _staged_sentinel_slices(spark: SparkSession, sf_dir: str,
     import os
     st = os.stat(os.path.join(sf_dir, "events.parquet"))
     key = (sf_dir, st.st_mtime_ns, st.st_size)
-    src = _SENTINEL_SLICE_CACHE.get(key)
-    if src is None:
-        import atexit
-        import shutil
-        import tempfile
+
+    def write(src):
         bound = ev.agg(
             (F.max("ts") + F.expr("INTERVAL 90 MINUTES")).alias("ts"))
         sentinel = bound.select(
@@ -2574,13 +2540,9 @@ def _staged_sentinel_slices(spark: SparkSession, sf_dir: str,
             F.lit("sentinel").alias("event_type"),
             "ts",
             F.lit(0.0).alias("value"))
-        _reap_stale_scratch("sentinel_slices_")
-        src = tempfile.mkdtemp(prefix="sentinel_slices_")
-        atexit.register(shutil.rmtree, src, ignore_errors=True)
         # max ts → the sentinel rides the last slice
         _write_time_slices(ev.unionByName(sentinel), src)
-        _SENTINEL_SLICE_CACHE[key] = src
-    return src
+    return _staged(_SENTINEL_SLICE_CACHE, key, "sentinel_slices_", write)
 
 
 def _sentinel_windowed_stream(spark: SparkSession, sf_dir: str,
@@ -2724,6 +2686,22 @@ def _scratch_dir(prefix: str) -> str:
     return d
 
 
+def _staged(cache: dict, key: tuple, prefix: str, write) -> str:
+    """The per-process staging caches' one lookup: the dir cached under
+    `key`, or a new _scratch_dir(prefix) filled by write(dir). A cached
+    dir that has vanished is staged again, never handed out:
+    _reap_stale_scratch deletes any dir under its prefix older than two
+    hours, including a live one cached by a longer-running process."""
+    import os
+
+    src = cache.get(key)
+    if src is None or not os.path.isdir(src):
+        src = _scratch_dir(prefix)
+        write(src)
+        cache[key] = src
+    return src
+
+
 def _bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C6b addendum driver run: build → persist → reload → probe the
     bloom index on real files (joins.bloom_index_persist)."""
@@ -2862,20 +2840,13 @@ def _staged_dup_slices(spark: SparkSession, sf_dir: str) -> str:
     import os
     st = os.stat(os.path.join(sf_dir, "events.parquet"))
     key = (sf_dir, st.st_mtime_ns, st.st_size)
-    src = _DUP_SLICE_CACHE.get(key)
-    if src is None:
-        import atexit
-        import shutil
-        import tempfile
-        _reap_stale_scratch("events_dup_slices_")
-        src = tempfile.mkdtemp(prefix="events_dup_slices_")
-        atexit.register(shutil.rmtree, src, ignore_errors=True)
+
+    def write(src):
         ev = load_table(spark, "events", sf_dir).select(
             "event_id", "user_id", "event_type", "ts", "value")
-        dup = ev.unionByName(ev.filter(F.col("event_id") % 3 == 0))
-        _write_time_slices(dup, src)
-        _DUP_SLICE_CACHE[key] = src
-    return src
+        _write_time_slices(
+            ev.unionByName(ev.filter(F.col("event_id") % 3 == 0)), src)
+    return _staged(_DUP_SLICE_CACHE, key, "events_dup_slices_", write)
 
 
 def _dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7225,10 +7196,11 @@ _QUERY_DEFS: dict[str, QuerySpec] = {
         _HOLT_ORACLE),
     "c38_reach": QuerySpec(
         # C38c: k-hop min-hop reachability (bounded transitive closure)
-        # over the top-3-out-edge trade graph, seeds = region 0. Spark
-        # runs BFS (each node expanded once, anti-join dedup); the
-        # oracle's recursive CTE enumerates paths — identical after
-        # min(hops), finite because hops < k bounds path length.
+        # over the top-3-out-edge trade graph, seeds = region 0. The
+        # driver runs BFS over the once-collected bounded graph (each
+        # node expanded once); the oracle's recursive CTE enumerates
+        # paths — identical after min(hops), finite because hops < k
+        # bounds path length.
         _t("customer orders lineitem supplier nation")(
             graph.khop_reachability),
         """
@@ -7731,8 +7703,9 @@ _QUERY_DEFS: dict[str, QuerySpec] = {
         """),
     "c38_closeness": QuerySpec(
         # C38h: closeness + exact-integer harmonic centrality via
-        # all-sources BFS on the top-3 trade graph; oracle = hop-capped
-        # recursive CTE collapsed to min-hop distances.
+        # driver-side all-sources BFS on the top-3 trade graph;
+        # oracle = hop-capped recursive CTE collapsed to min-hop
+        # distances.
         _t("customer orders lineitem supplier nation")(
             graph.closeness_centrality),
         """
@@ -9904,8 +9877,8 @@ _QUERY_DEFS: dict[str, QuerySpec] = {
         """),
     "c38_scc": QuerySpec(
         # C38j: strongly connected components of the sparsified trade
-        # digraph — BFS closure ∩ its transpose, min-id labels; the
-        # oracle's UNION-dedup recursion computes the same closure.
+        # digraph — driver-side closure ∩ its transpose, min-id labels;
+        # the oracle's UNION-dedup recursion computes the same closure.
         _t("customer orders lineitem supplier nation")(graph.scc_trade),
         """
         WITH RECURSIVE e0 AS (
@@ -11310,8 +11283,8 @@ _QUERY_DEFS: dict[str, QuerySpec] = {
         """),
     "c38_sssp": QuerySpec(
         # C38 addendum: weighted single-source shortest paths
-        # (Bellman-Ford) over the sparsified trade digraph; oracle
-        # recursion is domain-bounded by the small integer costs.
+        # (driver-side Bellman-Ford) over the sparsified trade digraph;
+        # oracle recursion is domain-bounded by the small integer costs.
         _t("customer orders lineitem supplier nation")(graph.sssp_trade),
         """
         WITH RECURSIVE e0 AS (

@@ -1056,3 +1056,22 @@ def test_interarrival_stream_checkpoint_restart_carries_moments(
                F.col("b.n_gaps").cast("double").alias("_n"))
            .filter(F.col("n_gaps") > 0))
     _assert_same(et.interarrival_stats(ev), et.interarrival_finalize(agg))
+
+
+def test_staging_cache_restages_a_vanished_dir(spark):
+    """A cached staging dir that has vanished is staged again, never
+    handed out: _reap_stale_scratch removes any dir under its prefix
+    older than two hours, including one a longer-running process still
+    has cached."""
+    import shutil
+
+    from kafka_streams_in_action_spark.plans import queries
+
+    first = queries._staged_event_single(spark, SF_DIR)
+    assert queries._staged_event_single(spark, SF_DIR) == first  # a hit
+    shutil.rmtree(first)
+    again = queries._staged_event_single(spark, SF_DIR)
+    assert again != first and os.path.isdir(again)
+    assert spark.read.parquet(again).count() == \
+        load_table(spark, "events", SF_DIR).count()
+    assert queries._staged_event_single(spark, SF_DIR) == again
